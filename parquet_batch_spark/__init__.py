@@ -22,7 +22,16 @@ Layers
 - ``streaming`` : Structured Streaming operators over the events table.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from parquet_batch_spark.session import get_spark, stop_spark
+
+# Python UDFs defined in this package ship to workers by value, so the
+# workers need not be able to import the package (a driver started from
+# another working directory, or a cluster without the package installed).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __all__ = ["get_spark", "stop_spark"]
 __version__ = "0.1.0"

@@ -25,73 +25,16 @@ from pyspark.sql import DataFrame, SparkSession
 # Registry emission order.  The correctness driver hard-checks only the
 # first ~50 registry entries per round, so ordering is coverage policy.
 #
-# ROTATION LEDGER (update every round; goal: every entry re-verified at
-# least every third round):
-#   r1 window: the first 50 in module order — scans/sources/relational/
-#     joins/tpch + window_distribution.  48 green; source_json_roundtrip
-#     + tpch_q12 hash-failed (Arrow int-width oracle casts).
-#   r2 window: the 48 r1-unchecked (windows, analytics, scalar funcs,
-#     UDFs, text, dedup, similarity, multimodal, streaming) + the two
-#     repaired r1 fails.  46 green; 4 ERRs (2 array-column outputs,
-#     2 no-oracle rows-only) — all four repaired in r3.
-#   r3 window: 27 never-checked r2-new + 4 repaired ERRs + 19 stalest
-#     r1 greens (scans/sources/sinks/joins/q1/agg_distinct).  49 green;
-#     ann_ivf_topk no_oracle (rows-only then — oracle added in r4).
-#   r4 window: slots 1-45 = the 45 continuation-session ops, 46 =
-#     join_interval_bucketed, 47 = ann_ivf_topk (first hash check),
-#     48-50 = mapInArrow/hll_union/scan_files_metadata.  50/50 green.
-#   r5 window: slots 1-9 = the ops CHANGED this round
-#     (3 int64 second-moment overflow fixes, 2 oracle-portability
-#     fixes, 4 dedup ops touched by the absolute shingle cap / shared
-#     intersection pass / CC rewrite), slots 10-50 = 41 never-checked
-#     stats_ops entries.  45 of 50 slots are stats_ops (VERDICT r4 #1).
-#   r6 window (this ordering): 225 never-driver-checked entries lead,
-#     strictly never-checked-first (VERDICT r5 #1).  Slots 1-6 = the
-#     six never-checked streaming patterns (VERDICT r5 #7), slots
-#     7-50 = 44 never-checked stats_ops in registry order.  Behind the
-#     window: the remaining 30 stats_ops, text_analysis (18),
-#     llm_prep (16), then the other modules' never-checked in module
-#     order — so r7/r8 windows are pre-staged.  Arithmetic note: with
-#     a 50-slot window the never-checked count floors at 225-50=175
-#     plus any r6-new ops; sub-160 needs two more registry-frozen
-#     rounds.
-#   r7 window (this ordering): 3 changed ops + 1 new op lead, then
-#     never-checked llm_prep/text_analysis/similarity (VERDICT r6 #1:
-#     the least-certified north-star families).  50/50 first-time;
-#     never-checked drops 195 -> 145 (incl. the one r7-new op).
-#   r8 window (this ordering): VERDICT r7 #1 — the full 50-slot
-#     window never-checked-first, north-star families before the stats
-#     tail: similarity's last 3, multimodal 10, pipeline_ops 11,
-#     dedup 8, corpus_ops 8, udfs 3, scale_ops 4, scans 1 (= 48),
-#     topped up with 2 warehouse entries.  Clears dedup/similarity/
-#     multimodal/pipeline_ops/corpus_ops to 0 judge-only; never-checked
-#     drops 145 -> 95.
-#   r9 window (this ordering): VERDICT r8 #1 — the pre-staged tail:
-#     34 stats_ops + 13 relational + 3 scalar_funcs head, all
-#     never-driver-checked (pre-verified fresh-process 50/50 in 78 s at
-#     the r8 closing tree).  Never-checked drops 95 -> 45.
-#   r10 pre-stage (VERDICT r8 #5): the remaining 45 never-checked
-#     (scalar_funcs 9, sources_ext 10, warehouse 7, joins 7, windows 7,
-#     analytics 5) — full driver certification of all 466 lands at r10.
-#     The 5 spare slots go to the 5 STALEST r1-certified entries in
-#     registry order (reshape_unpivot, agg_rollup, agg_cube,
-#     agg_grouping_sets, agg_pivot — r1 window, never re-checked since;
-#     29 r1-stale entries remain in total, the rest cycle from r11).
-#   r10 window (this ordering, VERDICT r9 #1): the pre-staged 45
-#     never-checked + 5 stalest-r1 spares ROTATED to slots 1-50
-#     (_R10_WINDOW below — byte-identical to the composition the judge
-#     pre-verified 50/50 green).  Closes full 466/466 certification.
-#   r11+ STANDING ROTATION POLICY (VERDICT r9 #2 — now MECHANICAL, no
-#     per-round decision or hand-pinned list needed): once
-#     CORRECTNESS_r10 lands, ``current_window()`` computes each round's
-#     window as the 50 entries whose most recent driver check is OLDEST
-#     (stalest-first, by last-checked round from CORRECTNESS_r*.json;
-#     ties broken by module order — the stable, rotation-independent
-#     ordering), EXCEPT that any op whose code or oracle changed that
-#     round jumps to slot 1 (list it in _CHANGED_THIS_ROUND by hand —
-#     the code can't see the diff).  At 466 entries and a 50-slot
-#     window, every op is re-certified at least every ~10 rounds; ops
-#     never touched after certification cycle on schedule.
+# Rotation policy (mechanical; the round-by-round history is in git):
+# ``current_window()`` computes each round's window as the 50 entries
+# whose most recent driver check is OLDEST (stalest-first, by
+# last-checked round from CORRECTNESS_r*.json; ties broken by module
+# order — the stable, rotation-independent ordering), EXCEPT that any
+# op whose code or oracle changed that round jumps to slot 1 (list it
+# in _CHANGED_THIS_ROUND by hand — the code can't see the diff).  At
+# 466 entries and a 50-slot window, every op is re-certified at least
+# every ~10 rounds; ops never touched after certification cycle on
+# schedule.
 
 # Ops whose implementation or oracle changed, keyed by the round the
 # change happened in.  They jump to the window head (displacing the
@@ -126,7 +69,9 @@ _CHANGED_THIS_ROUND: dict[str, int] = {
     # quantizer and sizes K from the DISTINCT count (VERDICT r11 #4) —
     # all quadratic work now sees only distinct mass, members rejoin by
     # one linear equi-join; oracle mirrors the collapse CTE-for-CTE.
-    "dedup_semantic_cluster": 12,
+    # r14 (key re-bumped): the inline quantizer memo moved out to the
+    # shared ``_sem_seeds`` stage; same seeds, same plan.
+    "dedup_semantic_cluster": 14,
     # r11: PCA reads the corpus ONCE (64x64 second-moment reduce, then
     # integer power iteration on the reduced matrix) instead of two
     # corpus passes + a corpus-wide cache; normalization moved to pure

@@ -19,7 +19,10 @@ blocks — correct and cheap on the ``local[n]`` deployments this
 engine targets, but on a multi-executor cluster an executor loss
 makes an in-flight query fail unrecoverably; a cluster deployment
 should swap those sites to reliable ``checkpoint()`` (or persisted
-tables) via a shared wrapper if that failure mode matters.
+tables) if that failure mode matters.  Stages shared across operators
+get their memo and checkpoint policy in one place,
+``catalog.shared_stage``; the inline per-operator sites do not go
+through it yet.
 """
 
 from __future__ import annotations

@@ -54,18 +54,17 @@ def test_triangle_census_invariants(spark, sf_dir):
     assert e <= v * (v - 1) // 2
 
 
-def test_triangle_plan_no_cartesian(spark, sf_dir, monkeypatch):
-    # assert on the FULL edge-build subtree, not the memoized
-    # localCheckpoint scan (ADVICE r9: segment_edges materializes once
-    # per session, which silently removed the edge joins from this plan)
-    from parquet_batch_spark.operators import dedup as dedup_mod
+def test_triangle_plan_no_cartesian(spark, sf_dir):
+    # assert on the edge-build subtree too, not only the consumer's
+    # checkpoint scan of the shared segment_edges stage
+    from parquet_batch_spark.operators.llm_prep import segment_edges
 
-    monkeypatch.setattr(dedup_mod, "MATERIALIZE_SHARED_STAGES", False)
-    plan = executed_plan(graph_triangle_count(spark, sf_dir))
+    plan = executed_plan(segment_edges.__wrapped__(spark, sf_dir))
+    plan += executed_plan(graph_triangle_count(spark, sf_dir))
     # the three scalar-combine crossJoins are broadcast single-row NLJs
     # (acceptable); a CartesianProduct would mean the edge joins
     # degenerated.  The wedge/triangle edge joins themselves must stay
-    # equi-joins — visible again now that the memo is off.
+    # equi-joins.
     assert "CartesianProduct" not in plan, plan
     assert plan.count("SortMergeJoin") + plan.count("BroadcastHashJoin") >= 1, plan
 

@@ -145,6 +145,8 @@ def test_dedup_pipelines_avoid_cartesian(spark, sf_dir, monkeypatch):
     plan-audited, not the gated single-task toy path."""
     from parquet_batch_spark.operators import dedup as dedup_mod
     from parquet_batch_spark.operators.dedup import (
+        _inter_pair_stats,
+        _lsh_candidate_pairs,
         dedup_embedding_cosine,
         dedup_minhash_lsh,
         dedup_ngram_jaccard,
@@ -152,9 +154,16 @@ def test_dedup_pipelines_avoid_cartesian(spark, sf_dir, monkeypatch):
     )
 
     monkeypatch.setattr(dedup_mod, "COS_SMALL_CORPUS", 0)
-    # audit the LOGICAL pipeline, not the memoized checkpoint scan
-    monkeypatch.setattr(dedup_mod, "MATERIALIZE_SHARED_STAGES", False)
-    for fn in (dedup_minhash_lsh, dedup_simhash, dedup_ngram_jaccard, dedup_embedding_cosine):
+    # the consumers read their shared stage as a checkpoint scan, so
+    # the stages' raw builds are audited alongside them
+    for fn in (
+        _lsh_candidate_pairs.__wrapped__,
+        _inter_pair_stats.__wrapped__,
+        dedup_minhash_lsh,
+        dedup_simhash,
+        dedup_ngram_jaccard,
+        dedup_embedding_cosine,
+    ):
         plan = executed_plan(fn(spark, sf_dir))
         assert "CartesianProduct" not in plan, f"{fn.__name__}: cartesian!"
         assert "BroadcastNestedLoopJoin" not in plan, f"{fn.__name__}: NLJ!"
@@ -222,15 +231,18 @@ def test_stratified_sample_filter_is_shuffle_free(spark, sf_dir):
     assert exchange_pos == -1 or filter_pos > exchange_pos, plan[:2000]
 
 
-def test_minhash_band_join_is_equi_join(spark, sf_dir, monkeypatch):
+def test_minhash_band_join_is_equi_join(spark, sf_dir):
     """The LSH candidate join must be a hash/sort-merge EQUI-join on
     the band key (its shuffle is bounded by bucket size), with the
     doc_a < doc_b ordering applied as a post-join condition."""
-    from parquet_batch_spark.operators import dedup as dedup_mod
-    from parquet_batch_spark.operators.dedup import dedup_minhash_lsh
+    from parquet_batch_spark.operators.dedup import (
+        _lsh_candidate_pairs,
+        dedup_minhash_lsh,
+    )
 
-    monkeypatch.setattr(dedup_mod, "MATERIALIZE_SHARED_STAGES", False)
-    plan = executed_plan(dedup_minhash_lsh(spark, sf_dir))
+    # the band join lives in the shared stage's raw build
+    plan = executed_plan(_lsh_candidate_pairs.__wrapped__(spark, sf_dir))
+    plan += executed_plan(dedup_minhash_lsh(spark, sf_dir))
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (
         "BroadcastHashJoin" in plan
     ), plan[:2000]
@@ -510,14 +522,14 @@ def test_r5_pair_ops_scale_shapes(spark, sf_dir, monkeypatch):
 # session ops: plan shapes that must survive 100x
 
 
-def test_kcore_rounds_are_hash_joins_no_cartesian(spark, sf_smoke, monkeypatch):
-    from parquet_batch_spark.operators import dedup as dedup_mod
+def test_kcore_rounds_are_hash_joins_no_cartesian(spark, sf_smoke):
     from parquet_batch_spark.operators.corpus_ops import graph_kcore
+    from parquet_batch_spark.operators.llm_prep import segment_edges
 
-    # assert on the FULL edge-build subtree, not the memoized
-    # checkpoint scan (r9: segment_edges materializes once per session)
-    monkeypatch.setattr(dedup_mod, "MATERIALIZE_SHARED_STAGES", False)
-    plan = executed_plan(graph_kcore(spark, sf_smoke))
+    # assert on the edge-build subtree too: the consumer reads the
+    # shared segment_edges stage as a checkpoint scan
+    plan = executed_plan(segment_edges.__wrapped__(spark, sf_smoke))
+    plan += executed_plan(graph_kcore(spark, sf_smoke))
     assert "CartesianProduct" not in plan
     # the shrinking-node-set joins stay equi (hash/SMJ), never NLJ
     assert "BroadcastNestedLoopJoin" not in plan
@@ -551,14 +563,14 @@ def test_threshold_sweep_ladder_is_broadcast(spark, sf_smoke):
     assert "CartesianProduct" not in plan
 
 
-def test_neighborhood_jaccard_no_cartesian(spark, sf_smoke, monkeypatch):
-    from parquet_batch_spark.operators import dedup as dedup_mod
+def test_neighborhood_jaccard_no_cartesian(spark, sf_smoke):
     from parquet_batch_spark.operators.corpus_ops import (
         graph_neighborhood_jaccard,
     )
+    from parquet_batch_spark.operators.llm_prep import segment_edges
 
-    monkeypatch.setattr(dedup_mod, "MATERIALIZE_SHARED_STAGES", False)
-    plan = executed_plan(graph_neighborhood_jaccard(spark, sf_smoke))
+    plan = executed_plan(segment_edges.__wrapped__(spark, sf_smoke))
+    plan += executed_plan(graph_neighborhood_jaccard(spark, sf_smoke))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -624,7 +636,7 @@ _DRIVER_MATERIALIZATION_WHITELIST = {
             "reduced-table normalization pattern)"),
     ("operators/dedup.py", "_hot_shingles", "collect"):
         (1, "hot-key list: at most sum(df)/cap entries survive the "
-            "absolute df cap (pigeonhole), memoized per sf_dir"),
+            "absolute df cap (pigeonhole), a shared stage"),
     ("operators/dedup.py", "dedup_clusters", "collect"):
         (2, "1-row scalar SUM(label) convergence probes per CC round"),
     ("operators/pipeline_ops.py", "decontam_bloom_filter", "collect"):
@@ -640,13 +652,11 @@ _DRIVER_MATERIALIZATION_WHITELIST = {
         (1, "ONE union of FL_ROUNDS TakeOrderedAndProject limits: "
             "<= FL_ROUNDS*(FL_CANDS+FL_ROUNDS-1) = 28 rows total "
             "(pool vectors ride along — the fused draw+fetch)"),
-    ("operators/similarity.py", "_hash_seed_cells", "collect"):
-        (1, "hash-ordered limit(K) seed draw, K = ceil(sqrt(N)) "
-            "centroids of dim doubles"),
-    ("operators/similarity.py", "dedup_semantic_cluster", "collect"):
-        (1, "hash-ordered limit(K) seed draw over the DISTINCT-vector "
-            "table (r12 collapse), K = max(16, ceil(sqrt(D)), "
-            "ceil(D/SEM_MAX_CELL)) rows, memoized per (sf_dir, cap)"),
+    ("operators/similarity.py", "_hash_seed_draw", "collect"):
+        (1, "hash-ordered limit(K) seed draw of K centroids of dim "
+            "doubles: K = ceil(sqrt(N)) for the IVF quantizer, or "
+            "max(16, ceil(sqrt(D)), ceil(D/SEM_MAX_CELL)) over the "
+            "DISTINCT-vector table for SemDeDup; both shared stages"),
     ("operators/similarity.py", "ann_ivf_topk", "collect"):
         (1, "query side: vec_id < N_QUERIES (<=10 rows)"),
     ("operators/similarity.py", "ann_ivfpq_topk", "collect"):
@@ -761,3 +771,53 @@ def test_no_unbounded_driver_materialization():
         k for k in _DRIVER_MATERIALIZATION_WHITELIST if k not in found
     ]
     assert not stale, f"whitelist entries with no matching site: {stale}"
+
+
+def test_no_hand_rolled_memos():
+    """Shared state has one home, ``catalog.shared_stage``: no module in
+    the package may bind a module-level empty ``{}``/``dict()`` (the
+    hand-rolled memo pattern) or define a ``MATERIALIZE_*`` switch that
+    turns shared stages off."""
+    import ast
+    import os
+
+    import parquet_batch_spark
+
+    def module_level(stmts):
+        for st in stmts:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            yield st
+            for field in ("body", "orelse", "finalbody", "handlers"):
+                yield from module_level(getattr(st, field, []))
+
+    def empty_dict(v):
+        return (isinstance(v, ast.Dict) and not v.keys) or (
+            isinstance(v, ast.Call)
+            and isinstance(v.func, ast.Name)
+            and v.func.id == "dict"
+            and not v.args
+            and not v.keywords
+        )
+
+    pkg_root = os.path.dirname(os.path.abspath(parquet_batch_spark.__file__))
+    offenders = []
+    for root, _dirs, files in os.walk(pkg_root):
+        for fn in sorted(f for f in files if f.endswith(".py")):
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, pkg_root)
+            for st in module_level(ast.parse(open(path).read()).body):
+                if isinstance(st, ast.Assign):
+                    targets, value = st.targets, st.value
+                elif isinstance(st, ast.AnnAssign):
+                    targets, value = [st.target], st.value
+                else:
+                    continue
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+                switch = any(n.startswith("MATERIALIZE_") for n in names)
+                if switch or empty_dict(value):
+                    offenders.append(f"{rel}:{st.lineno} {names}")
+    assert not offenders, (
+        "module-level memo dict or shared-stage switch — use "
+        f"catalog.shared_stage instead: {offenders}"
+    )

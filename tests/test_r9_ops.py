@@ -147,15 +147,16 @@ def test_hash_seed_cells_memoized_per_sf_dir(spark, sf_dir):
     consistent with _ivf_k of the corpus count)."""
     from parquet_batch_spark.catalog import count_table
     from parquet_batch_spark.operators.similarity import (
-        _CELL_MEMO,
+        _cell_seeds,
         _hash_seed_cells,
         _ivf_k,
     )
 
-    _CELL_MEMO.pop(sf_dir, None)
+    _cell_seeds.cache_clear()
     _, cents1, k1 = _hash_seed_cells(spark, sf_dir)
     _, cents2, k2 = _hash_seed_cells(spark, sf_dir)
     assert cents1 is cents2 and k1 == k2
+    assert _cell_seeds.cache_info().misses == 1
     assert k1 == _ivf_k(count_table(spark, sf_dir, "embeddings"))
     assert cents1.shape[0] == k1
 
@@ -163,26 +164,16 @@ def test_hash_seed_cells_memoized_per_sf_dir(spark, sf_dir):
 def test_segment_edges_memoized_and_checkpointed(spark, sf_dir):
     """r9: nine graph consumers share the segment-sharing edge table —
     it must materialize once per (session, sf_dir) and return the same
-    DataFrame object on re-call; with MATERIALIZE_SHARED_STAGES off it
-    must return the raw (un-memoized) build."""
-    from parquet_batch_spark.operators import dedup as dedup_mod
-    from parquet_batch_spark.operators.llm_prep import (
-        _SEGMENT_EDGES,
-        segment_edges,
-    )
+    DataFrame object on re-call; its ``__wrapped__`` build must return
+    the raw (un-memoized) plan with the same rows."""
+    from parquet_batch_spark.operators.llm_prep import segment_edges
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _SEGMENT_EDGES.pop(key, None)
+    segment_edges.cache_clear()
     e1 = segment_edges(spark, sf_dir)
     e2 = segment_edges(spark, sf_dir)
     assert e1 is e2
     rows = e1.count()
     assert rows > 0
-    old = dedup_mod.MATERIALIZE_SHARED_STAGES
-    try:
-        dedup_mod.MATERIALIZE_SHARED_STAGES = False
-        raw = segment_edges(spark, sf_dir)
-        assert raw is not e1
-        assert raw.count() == rows
-    finally:
-        dedup_mod.MATERIALIZE_SHARED_STAGES = old
+    raw = segment_edges.__wrapped__(spark, sf_dir)
+    assert raw is not e1
+    assert raw.count() == rows
