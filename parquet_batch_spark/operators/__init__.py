@@ -95,8 +95,8 @@ _CHANGED_THIS_ROUND: dict[str, int] = {
     # free 64-column element_at sum aggregates (mean + Weiszfeld).
     # r13 (key re-bumped): REVERTED to the posexplode form — the r12
     # shape was a driver-confirmed 1.87× sf0.1 regression (VERDICT r12
-    # #1); phase-level A/B in tools/ab_gm.py localized it to the
-    # no-grouping 64-sum aggregates.
+    # #1); phase-level A/B in `git show a352aea:tools/ab_gm.py`
+    # localized it to the no-grouping 64-sum aggregates.
     "embedding_geometric_median": 13,
     # simhash: fingerprint subtree localCheckpoint'd so the band
     # self-join stops re-computing the vote aggregate twice.
@@ -161,7 +161,8 @@ _CHANGED_THIS_ROUND: dict[str, int] = {
     # r13 (key re-bumped from 12): centroid update REVERTED to
     # posexplode + groupBy(k, d) — the same finding as the geometric-
     # median revert (wide multi-sum aggregates lose to Generate +
-    # hash-agg; tools/ab_kmeans_update.py 0.62 vs 0.91 s).
+    # hash-agg; `git show a352aea:tools/ab_kmeans_update.py` 0.62 vs
+    # 0.91 s).
     "ml_kmeans_lloyd": 13,
     # r13 duplicated-subtree checkpoints (the r12 disease, second
     # sweep): the vocab²-bounded bigram-count reduce feeds 2-4

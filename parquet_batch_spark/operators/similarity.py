@@ -1878,8 +1878,9 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         # of the r12 groupBy(k)+64-element_at-sum shape, the same
         # finding as embedding_geometric_median: the wide multi-sum
         # aggregate evaluates SLOWER than Generate + hash-agg
-        # (tools/ab_kmeans_update.py over a fixed assignment table:
-        # 0.62 s vs 0.91 s per update job, probe 0.333), and the
+        # (`git show a352aea:tools/ab_kmeans_update.py` over a fixed
+        # assignment table: 0.62 s vs 0.91 s per update job, probe
+        # 0.333), and the
         # (k, d) partial agg already reduces the exchange to
         # K·DIM rows per task at any corpus size.
         sums = (
@@ -2423,13 +2424,13 @@ def embedding_geometric_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 REVERT to posexplode + groupBy(d) (VERDICT r12 #1): the r12
     # grouping-free 64-column aggregate was a measured 1.87× sf0.1
     # regression (driver 2.03 → 3.79 s).  A phase-level A/B on a quiet
-    # box (tools/ab_gm.py) localized it: the no-grouping aggregate of
-    # 64 element_at sums is SLOWER than Generate+hash-agg in both
-    # halves — mean pass 0.395 vs 0.222 s, Weiszfeld pass 0.768 vs
-    # 0.328 s (64 decimal(38,0) sum expressions in one codegen'd
-    # no-grouping aggregate evaluate worse than the 64-group hash
-    # aggregate the explode feeds, whose map-side partial agg reduces
-    # the exchange to 64 rows/task at any corpus size).
+    # box (`git show a352aea:tools/ab_gm.py`) localized it: the
+    # no-grouping aggregate of 64 element_at sums is SLOWER than
+    # Generate+hash-agg in both halves — mean pass 0.395 vs 0.222 s,
+    # Weiszfeld pass 0.768 vs 0.328 s (64 decimal(38,0) sum expressions
+    # in one codegen'd no-grouping aggregate evaluate worse than the
+    # 64-group hash aggregate the explode feeds, whose map-side partial
+    # agg reduces the exchange to 64 rows/task at any corpus size).
     sums = (
         rows.select(F.posexplode("xq").alias("d", "xv"))
         .groupBy("d")

@@ -60,7 +60,6 @@ class ParquetReader:
         batch_readahead: int | None = None,
         fragment_readahead: int | None = None,
         use_threads: bool | None = None,
-        prefetch_partitions: bool | None = None,
         **_ignored: Any,
     ) -> Generator[dict, None, None]:
         """Expert path (reference reader.py:47-72).
@@ -95,14 +94,12 @@ class ParquetReader:
                 "executor-side scan parallelism is cluster-scheduled",
                 stacklevel=2,
             )
-        if prefetch_partitions is None:
-            prefetch_partitions = bool(batch_readahead)
         conf = df.sparkSession.conf
         prior = conf.get(_BATCH_SIZE_CONF, None) if batch_size is not None else None
         if batch_size is not None:
             conf.set(_BATCH_SIZE_CONF, str(batch_size))
         try:
-            for row in df.toLocalIterator(prefetchPartitions=prefetch_partitions):
+            for row in df.toLocalIterator(prefetchPartitions=bool(batch_readahead)):
                 yield row.asDict(recursive=True)
         finally:
             if batch_size is not None:

@@ -821,3 +821,90 @@ def test_no_hand_rolled_memos():
         "module-level memo dict or shared-stage switch — use "
         f"catalog.shared_stage instead: {offenders}"
     )
+
+
+# Module-level definitions that only tests (or importers) name, each
+# with the reason it stays.
+_UNREFERENCED_ALLOWLIST = {
+    "__version__": "package metadata for importers",
+    "plans.inspect.whole_stage_codegen_spans": "plan-inspection helper for tests",
+    "plans.inspect.global_window_count": "plan-inspection helper for tests",
+    "operators.scale_ops.skip_file_counts": (
+        "test seam: files kept vs total behind the scan-skipping assertion"),
+    "operators.scale_ops.join_strategy_merge_twin": (
+        "test seam: the sort-merge twin the join-strategy test compares"),
+    "operators.warehouse.zorder_output_dir": (
+        "test seam: where sink_zorder_cluster stages its clustered copy"),
+}
+
+
+def test_no_unreferenced_module_defs():
+    """Walk the package AST: every module-level function, class or
+    constant must be named somewhere outside its own definition, in the
+    package, bench.py, __spark_entry__.py, perfbench/ or tools/ (test
+    references do not count), unless allowlisted above; the allowlist
+    must not go stale."""
+    import ast
+    import os
+    from collections import Counter
+
+    import parquet_batch_spark
+
+    pkg_root = os.path.dirname(os.path.abspath(parquet_batch_spark.__file__))
+    repo = os.path.dirname(pkg_root)
+
+    def sources(*roots):
+        for root in roots:
+            if root.endswith(".py"):
+                yield root
+                continue
+            for d, _dirs, files in os.walk(root):
+                yield from (os.path.join(d, f) for f in sorted(files) if f.endswith(".py"))
+
+    def names_used(tree):
+        used = Counter()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+                used[n.id] += 1
+            elif isinstance(n, ast.Attribute):
+                used[n.attr] += 1
+            elif isinstance(n, ast.alias):
+                used[n.name.rsplit(".", 1)[-1]] += 1
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                used[n.value] += 1  # registry keys, getattr by name
+        return used
+
+    trees = {
+        path: ast.parse(open(path).read())
+        for path in sources(
+            pkg_root,
+            os.path.join(repo, "bench.py"),
+            os.path.join(repo, "__spark_entry__.py"),
+            os.path.join(repo, "perfbench"),
+            os.path.join(repo, "tools"),
+        )
+    }
+    total = sum((names_used(t) for t in trees.values()), Counter())
+    found = set()
+    for path, tree in trees.items():
+        if not path.startswith(pkg_root + os.sep):
+            continue
+        module = os.path.relpath(path, pkg_root)[: -len(".py")].replace(os.sep, ".")
+        module = module.removesuffix("__init__").rstrip(".")
+        for st in tree.body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [st.name]
+            elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+                targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            own = names_used(st)
+            for name in names:
+                if name != "__all__" and total[name] == own[name]:
+                    found.add(f"{module}.{name}".lstrip("."))
+
+    unlisted = sorted(found - _UNREFERENCED_ALLOWLIST.keys())
+    assert not unlisted, f"unreferenced module-level definition(s), delete them: {unlisted}"
+    stale = sorted(_UNREFERENCED_ALLOWLIST.keys() - found)
+    assert not stale, f"allowlist entries that are now referenced or gone: {stale}"

@@ -266,67 +266,50 @@ def test_fan_out_bin_packing_estimate(spark, tmp_path):
     assert out2.rdd.getNumPartitions() == target
 
 
+def _spreads_iff_under_target(spark, df):
+    """fan_out keeps a scan exactly when Spark splits it into at least
+    ``defaultParallelism`` partitions."""
+    from parquet_batch_spark.catalog import fan_out
+
+    actual = df.rdd.getNumPartitions()
+    kept = fan_out(df, spark) is df
+    assert kept == (actual >= spark.sparkContext.defaultParallelism), actual
+
+
 def test_pack_estimate_matches_spark_exactly(spark, tmp_path):
-    """_spark_pack_estimate reproduces Spark's FilePartition packing
-    byte-for-byte on real scans, including ADVICE r7's boundary case
-    (one file a bit over 2 split sizes, where the old
-    ceil(totalWithCost/split) over-counted by one and fan_out skipped
-    a spread it should have made)."""
-    import os
-
-    from parquet_batch_spark.catalog import _spark_pack_estimate
-
-    target = spark.sparkContext.defaultParallelism
-
-    # ~10 MB single file: with openCost padding the split lands near
-    # total/target, so the estimate sits exactly on the boundary the
-    # advisor flagged (est must equal Spark's packing, not exceed it)
+    """fan_out's split count is Spark's own FilePartition packing, so
+    its skip/spread decision equals ``actual partitions >= target`` on
+    a ~10 MB single file (one bit over 2 split sizes: a
+    ceil(totalWithCost/split) estimate over-counts it by one) and on a
+    6-file directory."""
     big = str(tmp_path / "big")
     spark.range(1_500_000).select(
         F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("pad")
     ).coalesce(1).write.parquet(big)
-    for path in (big, str(tmp_path / "big2")):
-        if path != big:
-            spark.range(40_000).repartition(6).write.parquet(path)
-        df = spark.read.parquet(path)
-        sizes = [
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ]
-        est = _spark_pack_estimate(sizes, target)
-        actual = df.rdd.getNumPartitions()
-        assert est == actual, (path, sizes, est, actual)
+    many = str(tmp_path / "big2")
+    spark.range(40_000).repartition(6).write.parquet(many)
+    for path in (big, many):
+        _spreads_iff_under_target(spark, spark.read.parquet(path))
 
-    # zero-length files yield NO chunk in Spark's splitFiles (the
-    # `0 until length by split` loop is empty), so they must not add
-    # partitions or charge pack-time open cost — they only pad the
-    # split-size derivation's totalBytes, as Spark's arithmetic does
-    ten_mb = 10 << 20
-    assert _spark_pack_estimate([0, 0, 0], target) == 1
-    # the zero-padded layout's totalBytes carries 4 open costs, so its
-    # split only reaches the 4 MiB openCost floor at target >= 6
-    # (27 MiB-ish total / 6 < floor); below that the layouts pack
-    # differently BY SPARK'S OWN ARITHMETIC (ADVICE r8: the old literal
-    # `== 3` failed on hosts with defaultParallelism <= 5 even though
-    # the estimate was correct) — pin the floor case at a fixed target
-    # instead of the host's core count, then sanity-check the host
-    # value against an explicit re-derivation of the split formula
-    assert (
-        _spark_pack_estimate([0, 0, 0, ten_mb], 8)
-        == _spark_pack_estimate([ten_mb], 8)
-        == 3
-    )
-    open_cost = 4 << 20
-    for sizes in ([0, 0, 0, ten_mb], [ten_mb]):
-        split = min(
-            128 << 20,
-            max(open_cost, (sum(sizes) + open_cost * len(sizes)) // target),
-        )
-        n_full, rem = divmod(ten_mb, split)
-        # every chunk + its open cost exceeds the split here, so each
-        # chunk packs alone: expected = chunk count
-        assert _spark_pack_estimate(sizes, target) == n_full + (1 if rem else 0)
+
+def test_fan_out_matches_spark_on_every_fixture_table(spark, sf_smoke, sf_dir):
+    """The same rule on all ten tables at sf0.001, sf0.01 and sf0.1,
+    and reading the count launches no Spark job."""
+    import os
+
+    from parquet_batch_spark.catalog import TABLES, fan_out
+
+    sc = spark.sparkContext
+    for sf in (sf_smoke, sf_dir, os.path.join(os.path.dirname(sf_dir), "sf0.1")):
+        for name in TABLES:
+            df = load(spark, sf, name)
+            sc.setJobGroup("fan_out_probe", "fan_out must not launch a job")
+            try:
+                fan_out(df, spark)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert not sc.statusTracker().getJobIdsForGroup("fan_out_probe"), (sf, name)
+            _spreads_iff_under_target(spark, df)
 
 
 def test_overflow_swept_rank_and_moment_sums_survive_web_scale(spark):
